@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * REAL merges-table byte-pair encoding — token-budget accounting against
@@ -117,6 +119,41 @@ object Bpe {
       unpersistHook)(w => applyMerges(w, ranks).length.toLong)
   }
 
+  /**
+   * THE pair ranking of every learner: weight descending, then left,
+   * then right symbol in CODE-POINT order, which is UTF-8 byte order —
+   * the order of Spark SQL's binary string compare and of DuckDB.
+   * `String.compareTo` compares UTF-16 code units instead and disagrees
+   * on ties between a U+E000–U+FFFF symbol and an astral one (whose
+   * leading surrogate sorts below U+E000). Allocation-free: the heap of
+   * [[learnMergesFast]] calls it millions of times.
+   */
+  private[operators] object PairRank extends Ordering[((String, String), Long)] {
+    def compare(x: ((String, String), Long), y: ((String, String), Long)): Int = {
+      val c = java.lang.Long.compare(y._2, x._2)
+      if (c != 0) c
+      else {
+        val l = compareCodePoints(x._1._1, y._1._1)
+        if (l != 0) l else compareCodePoints(x._1._2, y._1._2)
+      }
+    }
+  }
+
+  /** Code-point order of two strings without decoding them: only the
+    * first differing UTF-16 unit matters, and there a surrogate (part of
+    * an astral code point) must rank above U+E000–U+FFFF, so both ranges
+    * are rotated before the compare. */
+  private[operators] def compareCodePoints(x: String, y: String): Int = {
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n && x.charAt(i) == y.charAt(i)) i += 1
+    if (i == n) Integer.compare(x.length, y.length)
+    else Integer.compare(codeUnitRank(x.charAt(i)), codeUnitRank(y.charAt(i)))
+  }
+
+  private def codeUnitRank(c: Char): Int =
+    if (c >= 0xE000) c - 0x800 else if (c >= 0xD800) c + 0x2000 else c.toInt
+
   /** Merge one adjacent pair everywhere, leftmost-first non-overlapping —
     * the single-rank slice of [[applyMerges]]'s loop, used per learning
     * round. */
@@ -135,8 +172,9 @@ object Bpe {
    * LEARN a merge table from a corpus — BPE vocabulary induction
    * (Sennrich et al. 2016 §3.2): start from character symbols, take the
    * highest-weighted adjacent symbol pair, merge it everywhere, repeat
-   * `nMerges` times. Ties break to the lexicographically smallest
-   * (left, right) — pinned, so learning is fully deterministic.
+   * `nMerges` times. Ties break to the smallest (left, right) in
+   * [[PairRank]]'s code-point order — pinned, so learning is fully
+   * deterministic.
    * Delegates to [[learnMergesBatched]] at batch size 1, which reproduces
    * this round-per-merge semantic exactly.
    */
@@ -174,14 +212,19 @@ object Bpe {
    *  driver-local reference at batch sizes {1, 2, 4, 8} on random
    *  corpora, and q217 gates batched(8) == sequential in-query.
    *
-   * SCALE SHAPE: the learning state is the DISTINCT-WORD frame
-   * (segmentation, corpus weight) — vocab-bounded and Zipf-tiny relative
-   * to the corpus, which is scanned exactly ONCE to build it. Each round
-   * is one weighted pair-count aggregation over that frame, a
-   * (batchSize+1)-row top-k collect, and a narrow re-segmentation map;
-   * lineage is truncated with `localCheckpoint` every 8 rounds (the
-   * connected-components loop's discipline). Nothing corpus-sized ever
-   * reaches the driver.
+   * SCALE SHAPE: the learning state is a persisted RDD of DISTINCT
+   * words (segmentation, corpus weight) — vocab-bounded and Zipf-tiny
+   * relative to the corpus, which one DataFrame aggregation scans exactly
+   * ONCE to build it. Each round is exactly ONE Spark job: adjacent pairs
+   * → `reduceByKey` → a (batchSize+1)-element `takeOrdered` by
+   * [[PairRank]], with no Catalyst planning in the loop. The round's
+   * narrow re-segmentation map is persisted lazily and fused into the
+   * NEXT round's job, which materializes it; the state it came from is
+   * released right after that job, and the last round's re-segmentation
+   * is never built. Every 8 rounds the new state is marked for a lazy
+   * `localCheckpoint`, which the next job performs, so lineage stays
+   * bounded (the connected-components loop's discipline). Nothing
+   * corpus-sized ever reaches the driver.
    */
   def learnMergesBatched(docs: DataFrame, textCol: String, nMerges: Int,
       batchSize: Int): Seq[(String, String)] =
@@ -199,69 +242,68 @@ object Bpe {
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     val spark = docs.sparkSession
     import spark.implicits._
-    var state = docs.where(col(textCol).isNotNull)
+    var state: RDD[(Array[String], Long)] = docs.where(col(textCol).isNotNull)
       .select(explode(graft.functions.Text.edgeStrippedTokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .as[(String, Long)]
+      .as[(String, Long)].rdd
       .map { case (w, n) => (codepointSymbols(w), n) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    state.count(): Unit
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    // the state `state` was mapped from: cached until this round's job
+    // has materialized `state`, then released
+    var parent: RDD[(Array[String], Long)] = null
     val merges = Seq.newBuilder[(String, String)]
     val roundSizes = Seq.newBuilder[Int]
     var total = 0
     var round = 0
     var exhausted = false
-    while (total < nMerges && !exhausted) {
-      val top = state.flatMap { case (syms, n) =>
-        (0 until syms.length - 1).iterator.map(i => (syms(i), syms(i + 1), n))
-      }.toDF("a", "b", "n")
-        .groupBy(col("a"), col("b")).agg(sum(col("n")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(batchSize + 1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        // maximal disjoint PREFIX of the ranking (stop at first overlap)
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        val used = scala.collection.mutable.Set.empty[String]
-        var i = 0
-        var stopped = false
-        while (i < top.length && accepted.size < batchSize && !stopped) {
-          val (a, b, c) = (top(i).getString(0), top(i).getString(1), top(i).getLong(2))
-          if (used(a) || used(b) || used(a + b)) stopped = true
-          else {
-            accepted += ((a, b, c))
-            used += a; used += b; used += (a + b)
-            i += 1
+    try {
+      while (total < nMerges && !exhausted) {
+        val top = state.flatMap { case (syms, n) =>
+          (0 until syms.length - 1).iterator.map(i => ((syms(i), syms(i + 1)), n))
+        }.reduceByKey(_ + _).takeOrdered(batchSize + 1)(PairRank)
+        if (parent != null) { parent.unpersist(): Unit; parent = null }
+        if (top.isEmpty) exhausted = true
+        else {
+          // maximal disjoint PREFIX of the ranking (stop at first overlap)
+          val accepted = scala.collection.mutable.ArrayBuffer.empty[((String, String), Long)]
+          val used = scala.collection.mutable.Set.empty[String]
+          var i = 0
+          var stopped = false
+          while (i < top.length && accepted.size < batchSize && !stopped) {
+            val ((a, b), _) = top(i)
+            if (used(a) || used(b) || used(a + b)) stopped = true
+            else {
+              accepted += top(i)
+              used += a; used += b; used += (a + b)
+              i += 1
+            }
+          }
+          // strict-dominance truncation against the first non-accepted pair
+          val safe =
+            if (i >= top.length) accepted.toSeq // no other pair exists at all
+            else {
+              val cNext = top(i)._2
+              val t = accepted.toSeq.takeWhile(_._2 > cNext)
+              if (t.isEmpty) accepted.toSeq.take(1) else t
+            }
+          val batch = safe.take(nMerges - total).map(_._1)
+          merges ++= batch
+          roundSizes += batch.size
+          total += batch.size
+          if (total < nMerges) {
+            parent = state
+            state = state.map { case (syms, n) =>
+              (batch.foldLeft(syms)((s, p) => mergePair(s, p._1, p._2)), n)
+            }.persist(StorageLevel.MEMORY_AND_DISK_SER)
+            if ((round + 1) % 8 == 0) state.localCheckpoint(): Unit
           }
         }
-        // strict-dominance truncation against the first non-accepted pair
-        val safe =
-          if (i >= top.length) accepted.toSeq // no other pair exists at all
-          else {
-            val cNext = top(i).getLong(2)
-            val t = accepted.toSeq.takeWhile(_._3 > cNext)
-            if (t.isEmpty) accepted.toSeq.take(1) else t
-          }
-        val batch = safe.take(nMerges - total).map(p => (p._1, p._2))
-        merges ++= batch
-        roundSizes += batch.size
-        total += batch.size
-        val prev = state
-        val mapped = state.map { case (syms, n) =>
-          (batch.foldLeft(syms)((s, p) => mergePair(s, p._1, p._2)), n)
-        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        // checkpoint rounds: the pre-checkpoint persisted handle must be
-        // released too, or one orphaned cached frame leaks per 8 rounds
-        // for the life of the session (the block manager holds it — only
-        // an explicit unpersist frees it)
-        state = if ((round + 1) % 8 == 0) mapped.localCheckpoint() else mapped
-        state.count(): Unit
-        if (state ne mapped) mapped.unpersist(): Unit
-        prev.unpersist(): Unit
+        round += 1
       }
-      round += 1
+    } finally {
+      state.unpersist(): Unit
+      if (parent != null) parent.unpersist(): Unit
     }
-    state.unpersist(): Unit
     (merges.result(), roundSizes.result())
   }
 
@@ -350,27 +392,17 @@ object Bpe {
     val seed = mutable.Set.empty[(String, String)]
     var wi = 0
     while (wi < words.length) { shift(wi, 1L, seed); wi += 1 }
-    // max-heap by (weight, then lexicographically SMALLEST pair wins ties)
-    val heap = mutable.PriorityQueue.empty[(Long, String, String)](
-      new Ordering[(Long, String, String)] {
-        def compare(x: (Long, String, String), y: (Long, String, String)): Int = {
-          val c = java.lang.Long.compare(x._1, y._1)
-          if (c != 0) c
-          else {
-            val a = y._2.compareTo(x._2)
-            if (a != 0) a else y._3.compareTo(x._3)
-          }
-        }
-      })
-    seed.foreach(p => counts.get(p).foreach(c => heap.enqueue((c, p._1, p._2))))
+    // PriorityQueue dequeues its maximum: reversed, that is PairRank's best
+    val heap = mutable.PriorityQueue.empty[((String, String), Long)](PairRank.reverse)
+    seed.foreach(p => counts.get(p).foreach(c => heap.enqueue((p, c))))
     val out = Seq.newBuilder[(String, String)]
     var made = 0
     var exhausted = false
     while (made < nMerges && !exhausted) {
       var chosen: (String, String) = null
       while (chosen == null && heap.nonEmpty) {
-        val (c, a, b) = heap.dequeue()
-        if (counts.getOrElse((a, b), 0L) == c) chosen = (a, b)
+        val (p, c) = heap.dequeue()
+        if (counts.getOrElse(p, 0L) == c) chosen = p
       }
       if (chosen == null) exhausted = true
       else {
@@ -391,7 +423,7 @@ object Bpe {
         })
         touched -= chosen
         counts.remove(chosen): Unit
-        touched.foreach(p => counts.get(p).foreach(c => heap.enqueue((c, p._1, p._2))))
+        touched.foreach(p => counts.get(p).foreach(c => heap.enqueue((p, c))))
       }
     }
     out.result()
@@ -415,7 +447,7 @@ object Bpe {
       }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
       if (counts.isEmpty) done = true
       else {
-        val ((a, b), _) = counts.minBy { case ((x, y), c) => (-c, x, y) }
+        val ((a, b), _) = counts.min(PairRank)
         out += ((a, b))
         state = state.map { case (syms, n) =>
           (mergePair(syms.toArray, a, b).toVector, n)

@@ -138,6 +138,68 @@ class BpeSpec extends AnyFunSuite with SparkSuite {
     assert(got == Seq(("a", "b"), ("c", "d")))
   }
 
+  test("batched learning fires one Spark job per round and leaves no cached state behind") {
+    // the distinct-word state is an RDD persisted per round: a round's job
+    // materializes the previous round's re-segmentation (no separate
+    // count), so the whole call costs the word-count aggregation plus ONE
+    // job per round; 16 rounds cross two lazy localCheckpoints
+    val sc = spark.sparkContext
+    val sentence = "low lower lowest new newer newest wide wider widest slow slowest"
+    val docs = (0L until 7L).map(i => (i, sentence)).toDF("id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("bpe.spec.marker") != null)
+          drained.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val (merges, sizes) =
+      try Bpe.learnMergesBatchedWithRounds(docs, "text", 16, batchSize = 1)
+      finally {
+        // listener events arrive in order: once the marker job's start is
+        // seen, every job the learner fired has been counted
+        sc.setLocalProperty("bpe.spec.marker", "1")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("bpe.spec.marker", null)
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        sc.removeSparkListener(listener)
+      }
+    assert(merges == Bpe.learnMergesLocal(sentence.split(" ").map(_ -> 1L).toMap, 16))
+    assert(sizes.length == 16)
+    assert(jobs.get <= sizes.length + 3, s"${jobs.get} jobs for ${sizes.length} rounds")
+    assert(sc.getPersistentRDDs.keySet == cachedBefore)
+  }
+
+  test("every learner breaks weight ties in code-point (UTF-8 byte) order") {
+    // (fullwidth A, b) and (mathematical bold A, b) tie at weight 1: U+FF21
+    // ranks below U+1D400 by code point, UTF-8 bytes and Spark SQL's string
+    // order, but above it by UTF-16 code unit (String.compareTo sees the
+    // leading surrogate U+D835)
+    val (fullA, boldA) = ("\uFF21", "\uD835\uDC00")
+    val docs = Seq((1L, s"${fullA}b ${boldA}b")).toDF("id", "text")
+    val vocab = Map(s"${fullA}b" -> 1L, s"${boldA}b" -> 1L)
+    val want = Seq((fullA, "b"), (boldA, "b"))
+    assert(Bpe.learnMerges(docs, "text", 4) == want)
+    assert(Bpe.learnMergesBatched(docs, "text", 4, batchSize = 4) == want)
+    assert(Bpe.learnMergesLocal(vocab, 4) == want)
+    assert(Bpe.learnMergesFast(vocab, 4) == want)
+    assert(Bpe.learnMergesCollected(docs, "text", 4) == want)
+    // the comparator itself against unsigned UTF-8 byte order, on strings
+    // mixing ASCII, Latin-1, U+E000-U+FFFF and astral code points
+    val alphabet = Seq("a", "z", "\u00E9", "\uE000", fullA, "\uFFFF", boldA, "\uD83D\uDE00")
+    val rnd = new scala.util.Random(5)
+    def word() = (0 until rnd.nextInt(4)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    for (_ <- 0 until 2000) {
+      val (x, y) = (word(), word())
+      val bytes = java.util.Arrays.compareUnsigned(
+        x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      assert(Integer.signum(Bpe.compareCodePoints(x, y)) == Integer.signum(bytes), s"$x vs $y")
+    }
+  }
+
   // --- incremental (fastBPE-structure) learner + collect-once path ---
 
   test("incremental learner equals the naive reference to exhaustion (random weighted vocabs)") {
