@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
   * inside ONE session, interleaved across passes, and reports per-mode
   * minima. Ambient CPU-steal bursts hit both modes of a pass equally, so
   * the paired minima are window-robust where two separate full-bench
-  * sweeps are not. The conf defaults to the round-14 scan fan-out; round
-  * 15 passes its own kill switches (spark.graft.gate.onepass, ...) as the
-  * optional 4th arg. Usage:
+  * sweeps are not. The conf defaults to the round-14 scan fan-out; other
+  * query-shape switches (spark.graft.query.persist) pass as the optional
+  * 4th arg. Usage:
   *   SPARK_GRAFT_CPUS=32 runMain graft.AbBench <sfDir> <reps> q1,q2,... [confKey]
   */
 object AbBench {

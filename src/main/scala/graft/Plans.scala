@@ -11,8 +11,13 @@ import java.nio.file.{Files, Paths}
   *
   * Same session shape as Bench (master/local[$SPARK_GRAFT_CPUS], shuffle
   * partitions = cpus) so the captured plans are the benched plans. Note
-  * some query constructors run eager work (store builds, staged exports)
-  * before returning their frame — dumping a plan can take real time.
+  * some query constructors still run eager work before returning their
+  * frame — staged exports and their digest checks (q231, q237, q241, ...),
+  * standing-store builds (the `ensure*` helpers, warmed by `prepare`),
+  * q255's data-dependent resume point, and one-off `isEmpty` checks (e.g.
+  * q242's fallback stripe, q249's epochs_differ) — so dumping a plan can
+  * take real time. Equivalence gates are not among them: they are
+  * broadcast sub-plans of the dumped plan.
   */
 object Plans {
   def main(args: Array[String]): Unit = {

@@ -108,9 +108,9 @@ object SparkEntry {
     while (cb != null) { cb(); cb = cleanups.poll() }
   }
 
-  /** ONE-PASS multiset symmetric difference (optimization guide §2.4 fewer
-    * shuffles / §5 don't pay one aggregation twice). The equivalence-gate
-    * pattern the artifact queries carried —
+  /** ONE-PASS multiset symmetric difference as a LAZY 1-row frame
+    * (optimization guide §2.4 fewer shuffles / §5 don't pay one aggregation
+    * twice). The equivalence-gate pattern the artifact queries carried —
     * `a.exceptAll(b).unionByName(b.exceptAll(a))` — computes EACH input
     * subtree TWICE (once per exceptAll; read-back/decode/tokenize chains
     * are expensive) and pays TWO signed-count aggregations over a ∪ b
@@ -123,25 +123,23 @@ object SparkEntry {
     * the diff cardinality are both exact, with identical null/NaN
     * semantics (exceptAll's own rewrite groups by the same null-safe,
     * float-normalized keys). Column matching is POSITIONAL like
-    * exceptAll's. Kill switch `spark.graft.gate.onepass=false` falls back
-    * to the literal two-exceptAll form (paired A/B evidence; the plan
-    * pins hold in both modes). */
-  private[graft] def multisetDiffCount(a: DataFrame, b: DataFrame): Long = {
+    * exceptAll's.
+    *
+    * The result is exactly one row, `n_diff: Long` (never null; 0 iff
+    * multiset(a) == multiset(b)), and runs NO job here: callers
+    * `crossJoin(broadcast(...))` it into their output, so the gate executes
+    * inside the query's own plan — AQE schedules its shuffle stages next to
+    * the output's and ReuseExchange shares the subtrees both sides read.
+    * A gate on an empty output yields an empty result, like any cross join. */
+  private[graft] def multisetDiff(a: DataFrame, b: DataFrame): DataFrame = {
     require(a.columns.length == b.columns.length,
       s"positional schema mismatch: ${a.columns.length} vs ${b.columns.length} columns")
-    val s = a.sparkSession
-    if (!s.conf.get("spark.graft.gate.onepass", "true").toBoolean)
-      a.exceptAll(b).unionByName(b.toDF(a.columns: _*).exceptAll(a)).count()
-    else {
-      val keys = a.columns.toSeq.map(col)
-      val net = a.withColumn("__ms_sgn", lit(1L))
-        .unionByName(b.toDF(a.columns: _*).withColumn("__ms_sgn", lit(-1L)))
-        .groupBy(keys: _*).agg(sum(col("__ms_sgn")).as("__ms_net"))
-        .where(col("__ms_net") =!= 0L)
-      val out = net.agg(coalesce(sum(abs(col("__ms_net"))), lit(0L)).as("__ms_n"))
-        .collect()
-      out(0).getLong(0)
-    }
+    val keys = a.columns.toSeq.map(col)
+    a.withColumn("__ms_sgn", lit(1L))
+      .unionByName(b.toDF(a.columns: _*).withColumn("__ms_sgn", lit(-1L)))
+      .groupBy(keys: _*).agg(sum(col("__ms_sgn")).as("__ms_net"))
+      .where(col("__ms_net") =!= 0L)
+      .agg(coalesce(sum(abs(col("__ms_net"))), lit(0L)).as("n_diff"))
   }
 
   /** Conf-gated within-query persist (MEMORY_AND_DISK_SER): the kill
@@ -153,25 +151,6 @@ object SparkEntry {
     if (df.sparkSession.conf.get("spark.graft.query.persist", "true").toBoolean)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     df
-  }
-
-  /** [[multisetDiffCount]]'s emptiness form — `multiset(a) == multiset(b)`
-    * exactly, computing each side once. (`isEmpty` early-exits on the
-    * first non-zero group instead of counting them all.) */
-  private[graft] def multisetEqual(a: DataFrame, b: DataFrame): Boolean = {
-    require(a.columns.length == b.columns.length,
-      s"positional schema mismatch: ${a.columns.length} vs ${b.columns.length} columns")
-    val s = a.sparkSession
-    if (!s.conf.get("spark.graft.gate.onepass", "true").toBoolean)
-      a.exceptAll(b).unionByName(b.toDF(a.columns: _*).exceptAll(a)).isEmpty
-    else {
-      val keys = a.columns.toSeq.map(col)
-      a.withColumn("__ms_sgn", lit(1L))
-        .unionByName(b.toDF(a.columns: _*).withColumn("__ms_sgn", lit(-1L)))
-        .groupBy(keys: _*).agg(sum(col("__ms_sgn")).as("__ms_net"))
-        .where(col("__ms_net") =!= 0L)
-        .isEmpty
-    }
   }
 
   /** MEMOIZED co-purchase pair graph (q144's construction, SINGLE-SOURCED
@@ -1570,8 +1549,7 @@ object SparkEntry {
         .join(sigs.select(col("doc_id").as("id_b"), col("simhash").as("sim_b")), col("id_a") < col("id_b"))
         .where(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)
         .select(col("id_a"), col("id_b"))
-      sigs.sparkSession.range(1).toDF()
-        .select(lit(multisetDiffCount(brute, banded) == 0L).as("banding_complete"))
+      multisetDiff(brute, banded).select((col("n_diff") === 0L).as("banding_complete"))
     }),
 
     // planted-duplicate recall for the minhash near-dup pipeline: exact
@@ -3673,8 +3651,7 @@ object SparkEntry {
         .unionByName(batch)
       val scratch = operators.Retrieval.buildPostings(spliced, "doc_id", "text")
       // symmetric difference — empty iff merged ≡ scratch (tf compared too)
-      val gate = merged.sparkSession.range(1).toDF()
-        .select(lit(multisetDiffCount(merged, scratch)).as("n_diff"))
+      val gate = multisetDiff(merged, scratch)
       merged
         .groupBy(pmod(col("doc_id"), lit(8L)).as("doc_bucket"))
         .agg(count(lit(1)).as("n_postings"), sum(col("tf")).as("tf_mass"))
@@ -4028,10 +4005,11 @@ object SparkEntry {
         sources.Export.shardDigests(p1) == sources.Export.shardDigests(p2)
       val bounded = manifest.forall(_._3 <= (1L << 20))
       val back = sources.Export.readJsonlShards(s, p1, docs.schema)
-      val exact = multisetEqual(back, docs)
+      val exact = multisetDiff(back, docs)
+        .select((col("n_diff") === 0L).as("round_trip_exact"))
       back.select(col("doc_id"), col("lang"),
           length(col("text")).cast("long").as("n_chars"))
-        .withColumn("round_trip_exact", lit(exact))
+        .crossJoin(broadcast(exact))
         .withColumn("shards_bounded", lit(bounded))
         .withColumn("deterministic", lit(deterministic))
     }),
@@ -4070,10 +4048,11 @@ object SparkEntry {
         .join(deltaIds, Seq("doc_id"), "left_anti")
         .join(removed, Seq("doc_id"), "left_anti")
         .unionByName(back)
-      val applies = multisetEqual(rebuilt, v2)
+      val applies = multisetDiff(rebuilt, v2)
+        .select((col("n_diff") === 0L).as("delta_applies_exactly"))
       back.select(col("doc_id"), col("lang"),
           length(col("text")).cast("long").as("n_chars"))
-        .withColumn("delta_applies_exactly", lit(applies))
+        .crossJoin(broadcast(applies))
     }),
 
     // q235: OPQ ANN — q174's probe through the eigenvalue-allocated
@@ -4242,11 +4221,12 @@ object SparkEntry {
         .select(col("doc_id"),
           concat_ws(" ", functions.Text.edgeStrippedTokens(col("text"))).as("detok"))
         .where(length(col("detok")) > 0)
-      val lossless = multisetEqual(rebuilt, source)
+      val lossless = multisetDiff(rebuilt, source)
+        .select((col("n_diff") === 0L).as("lossless_exact"))
       back.select(col("shard"), col("bin"), col("n_docs"), col("n_tokens"))
         .withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("deterministic", lit(deterministic))
-        .withColumn("lossless_exact", lit(lossless))
+        .crossJoin(broadcast(lossless))
     }),
 
     // q238: INCREMENTAL TOKEN-SHARD MAINTENANCE — snapshot v2 does not
@@ -4300,10 +4280,11 @@ object SparkEntry {
         .join(removed, Seq("doc_id"), "left_anti")
         .unionByName(back)
       val scratch = operators.TokenShards.tokenizeToIds(v2, "doc_id", "text", merges, vocab)
-      val applies = multisetEqual(rebuilt, scratch)
+      val applies = multisetDiff(rebuilt, scratch)
+        .select((col("n_diff") === 0L).as("delta_applies_exactly"))
       back.join(ship, Seq("doc_id"))
         .select(col("doc_id"), col("status"), col("n_tokens"))
-        .withColumn("delta_applies_exactly", lit(applies))
+        .crossJoin(broadcast(applies))
     }),
 
     // q239: CJK SEGMENTATION PARITY — the multilingual-crawl gate for the
@@ -4380,10 +4361,11 @@ object SparkEntry {
       val source = planted
         .select(col("doc_id"),
           concat_ws(" ", functions.Text.edgeStrippedTokens(col("text"))).as("detok"))
-      val lossless = multisetEqual(rebuilt, source)
+      val lossless = multisetDiff(rebuilt, source)
+        .select((col("n_diff") === 0L).as("lossless_exact"))
       back.select(col("shard"), col("bin"), col("n_docs"), col("n_tokens"))
         .withColumn("deterministic", lit(deterministic))
-        .withColumn("lossless_exact", lit(lossless))
+        .crossJoin(broadcast(lossless))
     }),
 
     // q241: THE NORTH STAR COMPOSED — crawl text to trainer artifact in
@@ -4438,11 +4420,12 @@ object SparkEntry {
         .select(col("doc_id"),
           concat_ws(" ", functions.Text.edgeStrippedTokens(col("clean"))).as("detok"))
         .where(length(col("detok")) > 0)
-      val lossless = multisetEqual(rebuilt, source)
+      val lossless = multisetDiff(rebuilt, source)
+        .select((col("n_diff") === 0L).as("lossless_exact"))
       back.select(col("shard"), col("bin"), col("n_docs"), col("n_tokens"))
         .withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("deterministic", lit(deterministic))
-        .withColumn("lossless_exact", lit(lossless))
+        .crossJoin(broadcast(lossless))
     }),
 
     // q242: BYTE-FALLBACK (TOTAL) TOKEN ENCODING — closes the operational
@@ -4490,7 +4473,8 @@ object SparkEntry {
         .select(col("doc_id"),
           concat_ws(" ", functions.Text.edgeStrippedTokens(col("text"))).as("detok"))
         .where(length(col("detok")) > 0)
-      val lossless = multisetEqual(rebuilt, source)
+      val lossless = multisetDiff(rebuilt, source)
+        .select((col("n_diff") === 0L).as("lossless_exact"))
       val nByte = size(filter(col("ids"), i =>
         i >= lit(operators.TokenShards.firstByteId) &&
           i < lit(operators.TokenShards.totalFirstSymbolId)))
@@ -4501,7 +4485,7 @@ object SparkEntry {
       val exercised = !out.where(col("n_byte_ids") > 0).isEmpty
       out.withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("fallback_exercised", lit(exercised))
-        .withColumn("lossless_exact", lit(lossless))
+        .crossJoin(broadcast(lossless))
     }),
 
     // q243: BINARY TOKEN SHARDS — the same terminal artifact as q237
@@ -4550,13 +4534,14 @@ object SparkEntry {
         .select(col("doc_id"),
           concat_ws(" ", functions.Text.edgeStrippedTokens(col("text"))).as("detok"))
         .where(length(col("detok")) > 0)
-      val lossless = multisetEqual(rebuilt, source)
+      val lossless = multisetDiff(rebuilt, source)
+        .select((col("n_diff") === 0L).as("lossless_exact"))
       back.select((col("bin_key") / lit(4294967296L)).cast("long").as("shard"),
           pmod(col("bin_key"), lit(4294967296L)).as("bin"),
           col("n_docs"), col("n_tokens"))
         .withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("deterministic", lit(deterministic))
-        .withColumn("lossless_exact", lit(lossless))
+        .crossJoin(broadcast(lossless))
     }),
 
     // q244: DETERMINISTIC TRAINING-ORDER SHUFFLE — the missing last step
@@ -4593,7 +4578,8 @@ object SparkEntry {
         bins.repartition(17), "release-1")
       val a = ordered.select(col("shard"), col("bin"), col("train_seq"))
       val b = ordered2.select(col("shard"), col("bin"), col("train_seq"))
-      val invariant = multisetEqual(a, b)
+      val invariant = multisetDiff(a, b)
+        .select((col("n_diff") === 0L).as("order_invariant"))
       // the ordered artifact is byte-deterministic end to end
       val root = s"${indexStoreRoot(dir, "documents")}/ordered_shards_v1"
       val (p1, p2) = (s"$root/a", s"$root/b")
@@ -4606,7 +4592,7 @@ object SparkEntry {
       ordered.select(col("shard"), col("bin"), col("train_seq"),
           col("n_docs"), col("n_tokens"))
         .withColumn("merges_pinned", lit(mergesPinned))
-        .withColumn("order_invariant", lit(invariant))
+        .crossJoin(broadcast(invariant))
         .withColumn("deterministic", lit(deterministic))
     }),
 
@@ -4725,10 +4711,11 @@ object SparkEntry {
       sources.Export.writeJsonlShards(keyed, root, "mix_key", nShards = 1,
         maxShardBytes = 1L << 20)
       val back = sources.Export.readJsonlShards(s, root, keyed.schema).drop("mix_key")
-      val consistent = multisetEqual(back, mixture)
+      val consistent = multisetDiff(back, mixture)
+        .select((col("n_diff") === 0L).as("manifest_consistent"))
       mixture
         .withColumn("merges_pinned", lit(mergesPinned))
-        .withColumn("manifest_consistent", lit(consistent))
+        .crossJoin(broadcast(consistent))
     }),
 
     // q248: CLUSTER-BALANCED SELECTION — the topic-axis curation move:
@@ -4756,15 +4743,16 @@ object SparkEntry {
         unpersistHook = onCleanup)
       val keptB = operators.Sampling.capPerKeySample(
         cells.repartition(13), "cent_id", "vec_id", 20L, unpersistHook = onCleanup)
-      val deterministic = multisetEqual(
-        keptA.select(col("vec_id")), keptB.select(col("vec_id")))
+      val deterministic = multisetDiff(
+          keptA.select(col("vec_id")), keptB.select(col("vec_id")))
+        .select((col("n_diff") === 0L).as("real_cells_deterministic"))
       val sizes = cells.groupBy(col("cent_id")).agg(count(lit(1)).as("__n"))
       val keptSizes = keptA.groupBy(col("cent_id")).agg(count(lit(1)).as("__k"))
       val underCapIntact = sizes.where(col("__n") <= 20)
         .join(keptSizes, Seq("cent_id"), "left")
         .where(coalesce(col("__k"), lit(0L)) =!= col("__n")).isEmpty
       kept.select(col("doc_id"), col("cell"))
-        .withColumn("real_cells_deterministic", lit(deterministic))
+        .crossJoin(broadcast(deterministic))
         .withColumn("under_cap_intact", lit(underCapIntact))
     }),
 
@@ -4813,7 +4801,8 @@ object SparkEntry {
       val Seq((_, o0, d0), (_, o1, d1)) = epochs
       val key0 = o0.select(col("shard"), col("bin"))
       val key1 = o1.select(col("shard"), col("bin"))
-      val sameBins = multisetEqual(key0, key1)
+      val sameBins = multisetDiff(key0, key1)
+        .select((col("n_diff") === 0L).as("same_bin_multiset"))
       val differ = !o0.select(col("shard"), col("bin"), col("train_seq"))
         .exceptAll(o1.select(col("shard"), col("bin"), col("train_seq"))).isEmpty
       epochs.map { case (e, o, det) =>
@@ -4822,7 +4811,7 @@ object SparkEntry {
           .withColumn("deterministic", lit(det))
       }.reduce(_.unionByName(_))
         .withColumn("merges_pinned", lit(mergesPinned))
-        .withColumn("same_bin_multiset", lit(sameBins))
+        .crossJoin(broadcast(sameBins))
         .withColumn("epochs_differ", lit(differ))
     }),
 
@@ -4905,32 +4894,27 @@ object SparkEntry {
       // difference over (gpos, id) equals the per-value sum of
       // (truthPred - addrPred) — a row where the predicates agree
       // contributes +1 and -1 to the same group (net 0), so only
-      // disagreeing rows shuffle at all. The old exceptAll-both-ways form
-      // computed the posexplode'd stream FOUR times and shuffled it twice.
-      // Kill switch spark.graft.gate.onepass=false restores that form.
+      // disagreeing rows shuffle at all (exceptAll both ways would compute
+      // the posexplode'd stream FOUR times and shuffle it twice). Like
+      // multisetDiff, the verdict is a lazy 1-row frame broadcast into the
+      // output: the gate runs inside the query's plan.
       val truthP = col("gpos") >= t
       val addrP = col("train_seq") > seqR ||
         (col("train_seq") === seqR && col("pos") >= t - offR)
-      val resumeExact =
-        if (!s.conf.get("spark.graft.gate.onepass", "true").toBoolean) {
-          val truth = stream.where(truthP).select(col("gpos"), col("id"))
-          val addressed = stream.where(addrP).select(col("gpos"), col("id"))
-          truth.exceptAll(addressed)
-            .unionByName(addressed.exceptAll(truth)).isEmpty
-        } else stream
-          .select(col("gpos"), col("id"),
-            (truthP.cast("long") - addrP.cast("long")).as("__ms_sgn"))
-          .where(col("__ms_sgn") =!= 0L)
-          .groupBy(col("gpos"), col("id")).agg(sum(col("__ms_sgn")).as("__ms_net"))
-          .where(col("__ms_net") =!= 0L)
-          .isEmpty
+      val resumeExact = stream
+        .select(col("gpos"), col("id"),
+          (truthP.cast("long") - addrP.cast("long")).as("__ms_sgn"))
+        .where(col("__ms_sgn") =!= 0L)
+        .groupBy(col("gpos"), col("id")).agg(sum(col("__ms_sgn")).as("__ms_net"))
+        .where(col("__ms_net") =!= 0L)
+        .agg((count(lit(1)) === 0L).as("resume_exact"))
       manifests.map { case (e, _, m) =>
         m.select(lit(e.toLong).as("epoch"), col("train_seq"), col("shard"),
           col("bin"), col("n_tokens"), col("token_offset"))
       }.reduce(_.unionByName(_))
         .withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("deterministic", lit(deterministic))
-        .withColumn("resume_exact", lit(resumeExact))
+        .crossJoin(broadcast(resumeExact))
     }),
 
     // q256: FILL-IN-THE-MIDDLE TRANSFORM (Bavarian et al. 2022) over the
@@ -4968,7 +4952,6 @@ object SparkEntry {
       val restored = operators.TokenShards.fimRestore(fim, pre, suf, mid)
         .select(col("doc_id"), col("ids"))
       val source = tokens.select(col("doc_id"), col("ids"))
-      val reassemblyExact = multisetEqual(restored, source)
       // the transformed corpus is a publishable artifact: binary round-trip
       val width = if (mid <= 0xffffL) 2 else 4
       val seqs = operators.TokenShards.packSequences(
@@ -4988,13 +4971,16 @@ object SparkEntry {
       val back = sources.Export.readBinaryShards(s, p1)
         .select(col("bin_key"), col("ids"))
       val written = seqs.select(col("bin_key"), col("ids"))
-      val binaryRoundtrip = multisetEqual(back, written)
+      // both gates in ONE 1-row frame, broadcast once into the output
+      val gates = multisetDiff(restored, source).toDF("__d_fim")
+        .crossJoin(multisetDiff(back, written).toDF("__d_bin"))
+        .select((col("__d_fim") === 0L).as("reassembly_exact"),
+          lit(deterministic).as("deterministic"),
+          (col("__d_bin") === 0L).as("binary_roundtrip"))
       fim.select(col("doc_id"), col("fim_applied"), col("prefix_len"),
           col("middle_len"), col("suffix_len"), col("n_tokens"))
         .withColumn("merges_pinned", lit(mergesPinned))
-        .withColumn("reassembly_exact", lit(reassemblyExact))
-        .withColumn("deterministic", lit(deterministic))
-        .withColumn("binary_roundtrip", lit(binaryRoundtrip))
+        .crossJoin(broadcast(gates))
     }),
 
     // q257: SFT CONVERSATION ASSEMBLY — role-tagged multi-turn records
@@ -5171,7 +5157,8 @@ object SparkEntry {
           col("rejected_len").cast("int")).as("rejected_mask"))
       val want = assembledPairs.select(col("pair_id"), col("chosen_seq"),
         col("chosen_mask"), col("rejected_seq"), col("rejected_mask"))
-      val branchesExact = multisetEqual(sliced, want)
+      val branchesExact = multisetDiff(sliced, want)
+        .select((col("n_diff") === 0L).as("branches_exact"))
       sources.Export.readMaskedBinaryShards(s, p1)
         .select((col("bin_key") / lit(4294967296L)).cast("long").as("shard"),
           pmod(col("bin_key"), lit(4294967296L)).as("bin"),
@@ -5179,7 +5166,7 @@ object SparkEntry {
           aggregate(col("mask"), lit(0L), (a, x) => a + x).as("n_trainable"))
         .withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("deterministic", lit(deterministic))
-        .withColumn("branches_exact", lit(branchesExact))
+        .crossJoin(broadcast(branchesExact))
     }),
 
     // q266: MAJORITY-VOTE PREFERENCE RESOLUTION — q263's repair step.
@@ -5327,12 +5314,13 @@ object SparkEntry {
       val seq2 = operators.TokenShards.withCurriculumOrder(
           bins.repartition(13), "stage", "curriculum-1")
         .select(col("shard"), col("bin"), col("train_seq"))
-      val invariant = multisetEqual(seq1, seq2)
+      val invariant = multisetDiff(seq1, seq2)
+        .select((col("n_diff") === 0L).as("order_invariant"))
       ordered.select(col("shard"), col("bin"), col("stage"), col("train_seq"),
           col("n_docs"), col("n_tokens"))
         .withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("stage_monotone", lit(monotone))
-        .withColumn("order_invariant", lit(invariant))
+        .crossJoin(broadcast(invariant))
     }),
 
     // q263: PREFERENCE-JUDGMENT CONSISTENCY AUDIT — the reward-model
@@ -5490,7 +5478,8 @@ object SparkEntry {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       onCleanup(() => { back.unpersist(); () })
       val cols = Seq("bin_key", "doc_ids", "doc_lens", "ids", "mask").map(col)
-      val roundtrip = multisetEqual(back.select(cols: _*), packed.select(cols: _*))
+      val roundtrip = multisetDiff(back.select(cols: _*), packed.select(cols: _*))
+        .select((col("n_diff") === 0L).as("binary_roundtrip"))
       // no-tear law: every record lands in EXACTLY one bin at full length
       val members = back.select(
           explode(arrays_zip(col("doc_ids"), col("doc_lens"))).as("z"))
@@ -5507,7 +5496,7 @@ object SparkEntry {
           aggregate(col("mask"), lit(0L), (a, x) => a + x).as("n_trainable"))
         .withColumn("merges_pinned", lit(mergesPinned))
         .withColumn("deterministic", lit(deterministic))
-        .withColumn("binary_roundtrip", lit(roundtrip))
+        .crossJoin(broadcast(roundtrip))
         .withColumn("no_tear", lit(noTear))
     }),
 
@@ -5605,8 +5594,7 @@ object SparkEntry {
     "q258_opq_drift" -> ((s, dir) => {
       val (basis, staleIdx, scratch, basis2, freshIdx, updated) =
         ensureOpqDriftIndex(s, dir)
-      val mergeGate = scratch.sparkSession.range(1).toDF()
-        .select(lit(multisetDiffCount(staleIdx.codes, scratch)).as("n_diff"))
+      val mergeGate = multisetDiff(staleIdx.codes, scratch)
       val nCodes = staleIdx.codes.agg(count(lit(1)).as("n_codes_merged"))
       val queries = updated.where(col("vec_id") < 4 ||
         (col("vec_id") >= 1000000L && col("vec_id") < 1000004L))
@@ -5754,10 +5742,11 @@ object SparkEntry {
         .join(removed, Seq("doc_id"), "left_anti")
         .unionByName(back)
       val scratch = operators.TokenShards.tokenizeToIds(v2, "doc_id", "text", merges, vocab)
-      val applies = multisetEqual(rebuilt, scratch)
+      val applies = multisetDiff(rebuilt, scratch)
+        .select((col("n_diff") === 0L).as("delta_applies_exactly"))
       back.join(ship, Seq("doc_id"))
         .select(col("doc_id"), col("status"), col("n_tokens"))
-        .withColumn("delta_applies_exactly", lit(applies))
+        .crossJoin(broadcast(applies))
     }),
 
     // q253: MULTIMODAL PAIR RELEASE — the q241-analog for the
@@ -5922,7 +5911,8 @@ object SparkEntry {
       val evalDetok = evalSet.withColumnRenamed("text", "detok")
       val detected = operators.Contamination.evalGramHits(
         dirty.select(col("doc_id"), col("detok")), evalDetok, "doc_id", "detok", 8)
-      val detectEqualsAudit = multisetEqual(detected, flagged)
+      val detectEqualsAudit = multisetDiff(detected, flagged)
+        .select((col("n_diff") === 0L).as("detect_equals_audit"))
       // the decontamination stage, then the published CLEAN artifact probes empty
       val clean = corpus.join(
         flagged.select(col("train_id").as("doc_id")), Seq("doc_id"), "left_anti")
@@ -5944,7 +5934,7 @@ object SparkEntry {
         naiveBinText, evalSet.withColumnRenamed("doc_id", "key"), "key", "text", 8)
         .where(col("train_id") === abBins.getOrElse(-16L, Long.MinValue)).isEmpty
       detected
-        .withColumn("detect_equals_audit", lit(detectEqualsAudit))
+        .crossJoin(broadcast(detectEqualsAudit))
         .withColumn("clean_zero_hits", lit(cleanZeroHits))
         .withColumn("boundary_same_bin", lit(boundarySameBin))
         .withColumn("boundary_unflagged", lit(boundaryUnflagged))
@@ -6051,8 +6041,7 @@ object SparkEntry {
       val merged = operators.Similarity.mergeIvfPqCodes(
         idx, idx.codes, slice, "vec_id", "embedding")
       val scratch = operators.Similarity.ivfPqEncode(idx, news, "vec_id", "embedding")
-      val gate = merged.sparkSession.range(1).toDF()
-        .select(lit(multisetDiffCount(merged, scratch)).as("n_diff"))
+      val gate = multisetDiff(merged, scratch)
       merged
         .groupBy(pmod(col("neighbor_id"), lit(8L)).as("vec_bucket"))
         .agg(count(lit(1)).as("n_rows"))
@@ -6262,17 +6251,18 @@ object SparkEntry {
         operators.Classifier.nbCounts(batchA, "lang", "text", 1024),
         operators.Classifier.nbCounts(batchB, "lang", "text", 1024))
       val scratch = operators.Classifier.nbCounts(train, "lang", "text", 1024)
-      val nDiff = multisetDiffCount(merged.tokenCounts, scratch.tokenCounts) +
-        multisetDiffCount(merged.labelTotals, scratch.labelTotals) +
-        multisetDiffCount(merged.docCounts, scratch.docCounts)
+      // the three count-frame gates as ONE 1-row frame, broadcast once
+      val gate = multisetDiff(merged.tokenCounts, scratch.tokenCounts)
+        .unionByName(multisetDiff(merged.labelTotals, scratch.labelTotals))
+        .unionByName(multisetDiff(merged.docCounts, scratch.docCounts))
+        .agg((sum(col("n_diff")) === 0L).as("merge_exact"))
       val pred = operators.Classifier.nbPredict(
         test, "doc_id", "text", operators.Classifier.modelFromCounts(merged))
       test.select(col("doc_id").as("id"), col("lang").as("actual"))
         .join(pred, Seq("id"))
         .groupBy(col("actual"), col("predicted"))
         .agg(count(lit(1)).as("n"))
-        .select(col("actual"), col("predicted"), col("n"),
-          lit(nDiff == 0L).as("merge_exact"))
+        .crossJoin(broadcast(gate))
     }),
 
     // all-pairs sparse cosine over a TF postings space (Bayardo-style
@@ -6571,12 +6561,14 @@ object SparkEntry {
         operators.Lm.lmCounts(docs.where(pmod(col("doc_id"), lit(4L)) === 2), "text"))
       val scratch = operators.Lm.lmCounts(
         docs.where(pmod(col("doc_id"), lit(2L)) === 0), "text")
-      val nDiff = multisetDiffCount(merged.bigrams, scratch.bigrams) +
-        multisetDiffCount(merged.unigrams, scratch.unigrams)
+      // both count-frame gates as ONE 1-row frame, broadcast once
+      val gate = multisetDiff(merged.bigrams, scratch.bigrams)
+        .unionByName(multisetDiff(merged.unigrams, scratch.unigrams))
+        .agg((sum(col("n_diff")) === 0L).as("merge_exact"))
       operators.Lm.scoreDocs(
           docs.where(pmod(col("doc_id"), lit(2L)) === 1), "doc_id", "text", merged)
-        .select(col("doc_id"), col("n_bigrams"), col("nll_fp"), col("avg_nll_fp"),
-          lit(nDiff == 0L).as("merge_exact"))
+        .select(col("doc_id"), col("n_bigrams"), col("nll_fp"), col("avg_nll_fp"))
+        .crossJoin(broadcast(gate))
     }),
 
     // q199: the LM as an actual FILTER — keep/drop verdicts, not raw

@@ -101,10 +101,14 @@ class PlanAuditSpec extends AnyFunSpec with SparkSuite {
     // persisted since round 14 so the guard count and the broadcast share
     // one pass, and the cached sub-plan's agg exchange can print more
     // than once in the dump; the property is WHAT shuffles, not how often
-    // the same exchange is rendered)
+    // the same exchange is rendered). The one other exchange is the
+    // real-cells determinism gate's, a broadcast sub-plan of this query: it
+    // compares two capped samples of IVF `vec_id`s, never the corpus rows
     val hashEx = "Exchange hashpartitioning\\(([^,]+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
-    assert(hashEx.nonEmpty && hashEx.forall(_.contains("_groupingexpression")),
+    val (gateEx, cellEx) = hashEx.partition(_.startsWith("vec_id#"))
+    assert(cellEx.nonEmpty && cellEx.forall(_.contains("_groupingexpression")),
       s"expected only cell-count aggregation exchanges, got $hashEx:\n$p")
+    assert(gateEx.distinct.size <= 1, s"expected at most the gate's vec_id exchange:\n$p")
     assert(p.contains("ReadSchema: struct<doc_id:bigint>"), p)
     assert(!p.contains("Window"), p)
   }

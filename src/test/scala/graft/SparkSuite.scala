@@ -22,6 +22,29 @@ object SparkSuite {
 trait SparkSuite {
   lazy val spark: SparkSession = SparkSuite.spark
 
+  /** `body`'s result and the number of Spark jobs it started. Listener
+    * events arrive in order, so once a marker job's start is seen every job
+    * `body` fired has been counted. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.suite.marker") != null)
+          drained.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty("spark.suite.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("spark.suite.marker", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never started")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Order-insensitive multiset equality between a Dataset and expected rows. */
   def assertMultiset[T](ds: Dataset[T], expected: Seq[T]): Unit = {
     val got = ds.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap

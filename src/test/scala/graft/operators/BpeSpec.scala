@@ -146,29 +146,12 @@ class BpeSpec extends AnyFunSuite with SparkSuite {
     val sc = spark.sparkContext
     val sentence = "low lower lowest new newer newest wide wider widest slow slowest"
     val docs = (0L until 7L).map(i => (i, sentence)).toDF("id", "text")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("bpe.spec.marker") != null)
-          drained.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
     val cachedBefore = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(listener)
-    val (merges, sizes) =
-      try Bpe.learnMergesBatchedWithRounds(docs, "text", 16, batchSize = 1)
-      finally {
-        // listener events arrive in order: once the marker job's start is
-        // seen, every job the learner fired has been counted
-        sc.setLocalProperty("bpe.spec.marker", "1")
-        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("bpe.spec.marker", null)
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        sc.removeSparkListener(listener)
-      }
+    val ((merges, sizes), jobs) =
+      countingJobs(Bpe.learnMergesBatchedWithRounds(docs, "text", 16, batchSize = 1))
     assert(merges == Bpe.learnMergesLocal(sentence.split(" ").map(_ -> 1L).toMap, 16))
     assert(sizes.length == 16)
-    assert(jobs.get <= sizes.length + 3, s"${jobs.get} jobs for ${sizes.length} rounds")
+    assert(jobs <= sizes.length + 3, s"$jobs jobs for ${sizes.length} rounds")
     assert(sc.getPersistentRDDs.keySet == cachedBefore)
   }
 
